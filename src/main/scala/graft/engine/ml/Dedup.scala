@@ -30,17 +30,14 @@ object Dedup {
   private val trackedCaches =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  private def trackCache(df: DataFrame): DataFrame =
-    trackedCaches.synchronized { val c = df.cache(); trackedCaches += c; c }
-
-  /** Public tracked cache for intermediates reused several times within
-    * ONE query invocation (the edge relation of an iterative graph key,
-    * a rank map consumed by two joins). MEMORY_AND_DISK, so an
-    * oversized relation spills instead of OOMing at scale; released by
-    * the runner's existing [[unpersistTracked]] sweep, so nothing
-    * persists across queries or runs. */
+  /** Tracked cache for intermediates reused several times within ONE
+    * query invocation (signatures, gram sets, the edge relation of an
+    * iterative graph key, a rank map consumed by two joins).
+    * MEMORY_AND_DISK, so an oversized relation spills instead of OOMing
+    * at scale; released by the runner's [[unpersistTracked]] sweep, so
+    * nothing persists across queries or runs. */
   def cacheTracked(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_NO_CACHE").contains("1")) df else trackCache(df)
+    trackedCaches.synchronized { val c = df.cache(); trackedCaches += c; c }
 
   def unpersistTracked(): Unit = trackedCaches.synchronized {
     trackedCaches.foreach(df =>
@@ -86,7 +83,7 @@ object Dedup {
     // once per side (the metric udf blocks exchange reuse) — and at
     // scale the capped inverted index is exactly what a set-similarity
     // join materializes once anyway
-    trackCache(assign.withColumn("bucket_n", count(lit(1)).over(w))
+    cacheTracked(assign.withColumn("bucket_n", count(lit(1)).over(w))
       .filter(col("bucket_n") >= 2 && keep(col("bucket_n")))
       .drop("bucket_n"))
   }
@@ -192,7 +189,7 @@ object Dedup {
         }
       }
       .toDF("doc_id", "sh_h", "sig")
-      .transform(trackCache)
+      .transform(cacheTracked)
   }
 
   /** LSH banding: split each signature into (bands × rowsPerBand), hash
@@ -375,7 +372,7 @@ object Dedup {
         s"${numHashes}_$seed") { tmp =>
       signatures(docs, numHashes, seed).write.mode("overwrite").parquet(tmp)
     }
-    trackCache(spark.read.parquet(path))
+    cacheTracked(spark.read.parquet(path))
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
@@ -511,7 +508,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, threshold: Double,
       freqOrdered: Boolean = false, maxBucket: Int = 10000): DataFrame = {
     // reused by the prefix index + verify joins
-    val grams = trackCache(bigramSets(docs))
+    val grams = cacheTracked(bigramSets(docs))
     val cand = ngramCandidates(grams, threshold, freqOrdered, maxBucket)
     graft.engine.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
     cand
@@ -600,17 +597,13 @@ object Dedup {
   def incrementalNearDups(existing: DataFrame, batch: DataFrame,
       threshold: Double, maxBucket: Int = 10000,
       existingTag: Option[String] = None): DataFrame = {
-    // (r15 note: caching only the COMPUTED batch signatures and leaving
-    // the persisted store's 3 consumers as lazy parquet re-scans was
-    // A/B'd — the union cache WINS (2.42/2.54/2.64 s cached vs
-    // 2.54/2.58/2.78 batch-only over 3 alternations, flat control):
-    // three columnar re-scans plus re-deriving is_new cost more than
-    // one in-memory materialization at this scale. Kept as in r14.)
+    // the whole union is cached: three columnar re-scans of the store
+    // plus re-deriving is_new cost more than one materialization
     val existingSigs = existingTag match {
       case Some(tag) => signatureStoreFor(existing, tag)
       case None      => bigramSets(existing)
     }
-    val grams = trackCache(
+    val grams = cacheTracked(
       existingSigs.withColumn("is_new", lit(false))
         .unionByName(bigramSets(batch).withColumn("is_new", lit(true))))
     val plenSql =
@@ -682,7 +675,7 @@ object Dedup {
     * test-asserted by forcing each path on the same graph. */
   def resolvePairs(pairs: DataFrame, docs: DataFrame,
       maxRounds: Int = 50, collectThreshold: Long = 100000L): DataFrame = {
-    val p = trackCache(pairs.select(col("doc_a"), col("doc_b")).distinct())
+    val p = cacheTracked(pairs.select(col("doc_a"), col("doc_b")).distinct())
     if (p.count() <= collectThreshold) resolveOnDriver(p, docs)
     else resolveDistributed(p, docs, maxRounds)
   }
@@ -742,7 +735,7 @@ object Dedup {
 
   private def resolveDistributed(pairs: DataFrame, docs: DataFrame,
       maxRounds: Int): DataFrame = {
-    val edges = trackCache(
+    val edges = cacheTracked(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"),
           col("doc_a").as("dst")))

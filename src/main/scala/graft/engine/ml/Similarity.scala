@@ -44,21 +44,15 @@ object Similarity {
     * The probe side is broadcast: one pass over the embedding table,
     * then a per-probe top-k window. The score is the native codegen
     * [[graft.engine.expr.CosineSimilarity]] — one fused loop per pair,
-    * bit-identical to the HOF-composed form (and the oracle). */
+    * bit-identical to the HOF-composed form (and the oracle).
+    * @note the corpus is scanned as partitioned, with no repartition:
+    *   for the small label-stratified probe sets this serves, the
+    *   exchange costs more than the parallelism pays. Callers with a
+    *   LARGE probe set must pre-spread the corpus
+    *   (`Scale.spreadForCompute`), as [[batchGroundTruthFor]] does. */
   def bruteForceTopK(emb: DataFrame, probeDf: DataFrame, k: Int): DataFrame = {
     GraftFunctions.ensureRegistered(emb.sparkSession)
-    // NO spreadForCompute here (r15): the cosine work is |emb|×|probes|,
-    // and the label-stratified probe sets this entry point serves are
-    // tiny, so the repartition exchange cost more than the parallelism
-    // paid — sim_search_topk regressed 0.43→0.64 s from the r14 spread
-    // (r14-verdict item 4). Callers with LARGE probe sets pre-spread the
-    // corpus themselves (see batchGroundTruthFor, where the spread
-    // measured a win). GRAFT_BF_SPREAD=1 restores the r14 shape for A/B.
-    val spreadEmb =
-      if (sys.env.get("GRAFT_BF_SPREAD").contains("1"))
-        graft.engine.ops.Scale.spreadForCompute(emb)
-      else emb
-    val scored = spreadEmb
+    val scored = emb
       .crossJoin(broadcast(probeDf))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -772,9 +766,7 @@ object Similarity {
       .join(probeDf.select(col("probe_id"), col("probe_emb")), Seq("probe_id"))
     val indexed = spark.read.parquet(indexPath)
       .filter(col("cell").isin(allCells: _*)) // prunes partitions
-    // (r14 note: spreadForCompute on the pruned-cell read was A/B'd —
-    // the probed cells are small enough that the repartition exchange
-    // cost more than the cosine parallelism paid; left unspread.)
+    // unspread: the probed cells are too small to pay for an exchange
     val scored = indexed.join(broadcast(probeCellDf), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -813,8 +805,7 @@ object Similarity {
     val path = graft.engine.io.Artifacts.ensure(spark,
       s"$warehouse/graft_groundtruth/batch_cosine_${safe}_${fp}_$k") { tmp =>
       // the batch probe set is ~10% of the corpus, so the |emb|×|probes|
-      // loop is heavy enough to earn the spread (r14 A/B win) — the
-      // small-probe entry point no longer spreads, so spread here
+      // loop is heavy enough to earn the spread bruteForceTopK omits
       bruteForceTopK(graft.engine.ops.Scale.spreadForCompute(emb),
         batchProbes(emb), k)
         .write.mode("overwrite").parquet(tmp)
@@ -1020,17 +1011,12 @@ object Similarity {
   /** Exact top-k EUCLIDEAN neighbours per probe — the ground truth for
     * auditing distance-ranked ANN (LSH); [[bruteForceTopK]] is the
     * cosine counterpart. Probe side broadcast, one pass over the
-    * table. */
+    * table.
+    * @note as with [[bruteForceTopK]], the corpus is not repartitioned:
+    *   callers with a large probe set must pre-spread it themselves. */
   def bruteForceTopKEuclid(emb: DataFrame, probeDf: DataFrame,
       k: Int): DataFrame = {
-    // NO spreadForCompute here (r15): see bruteForceTopK — this entry
-    // point only ever serves the tiny label-stratified probe set, where
-    // the repartition exchange costs more than the parallelism pays.
-    val spreadEmb =
-      if (sys.env.get("GRAFT_BF_SPREAD").contains("1"))
-        graft.engine.ops.Scale.spreadForCompute(emb)
-      else emb
-    val scored = spreadEmb
+    val scored = emb
       .crossJoin(broadcast(probeDf))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),

@@ -864,10 +864,8 @@ object Aggregates {
         val li = lineitem(s, d).select(col("l_returnflag").as("flag"),
           col("l_extendedprice")
             .cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("p"))
-        // (r14 note: a (flag, p)-histogram + blocked-cumulative form was
-        // tried to parallelize the 3-task rank window — it regressed:
-        // prices are near-unique, so the histogram aggregation is a
-        // full-size extra exchange. The single window stays.)
+        // one rank window: prices are near-unique, so a histogram +
+        // blocked-cumulative form adds a full-size exchange
         val w = Window.partitionBy("flag").orderBy("p", "l_orderkey")
         val ranked = lineitem(s, d).select(col("l_returnflag").as("flag"),
             col("l_extendedprice")
@@ -1152,8 +1150,7 @@ object Aggregates {
           .agg(expr("CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT)")
             .as("wsum"))
         val tot = h.groupBy("flag").agg(sum("wsum").as("wt"))
-        // (r14 note: blockedCumSum A/B'd here too — slower at this
-        // scale, same verdict as ml_spearman_corr; plain window stays.)
+        // plain window: Scale.blockedCumSum costs more than it saves here
         val w = Window.partitionBy("flag").orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, 0)
         h.withColumn("cw", sum("wsum").over(w))

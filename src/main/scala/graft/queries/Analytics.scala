@@ -177,17 +177,9 @@ object Analytics {
           .select((col("l_suppkey").cast("bigint") * 2).as("a"),
             (col("l_partkey").cast("bigint") * 2 + 1).as("b"))
           .distinct()
-        // (r14 note: a tracked cache of this edge relation was A/B'd —
-        // ReuseExchange already dedups the distinct's exchanges, so the
-        // cache only added a materialization barrier and measured
-        // consistently SLOWER; left uncached.)
-        // (r15 note: an eager localCheckpoint of this edge relation —
-        // the eigenvector/hits/closeness win — was A/B'd here too and
-        // measured FLAT (1.15/1.39/1.11 uncheckpointed vs
-        // 1.19/1.32/1.16 s over 3 reversed-order alternations, flat
-        // control): pageRank's 5 rounds are rank-relation joins, the
-        // edge subtree is shallow, and the materialization pays for
-        // itself only on the deeper iterate chains. Left lazy.)
+        // left lazy: ReuseExchange already dedups the distinct's
+        // exchanges, and the edge subtree is too shallow for a cache or
+        // checkpoint barrier to pay.
         val edges = e0.select(col("a").as("src"), col("b").as("dst"))
           .union(e0.select(col("b").as("src"), col("a").as("dst")))
         graft.engine.ops.Graph.pageRank(edges, 5)
@@ -1210,20 +1202,15 @@ object Analytics {
     // oracle-checkable form.
     Q("graph_hits",
       (s, d) => {
-        // (r14 note: caching this edge relation was A/B'd and measured
-        // slightly slower — ReuseExchange covers the 3 consumers.)
-        // r15 (verdict item 1): eager localCheckpoint instead — truncates
-        // the logical plan so the a1/h1/a2 chain and the final join no
-        // longer carry the join+distinct subtree 4×; GRAFT_GRAPH_NOCKPT=1
-        // restores the r14 shape for A/B.
-        val edges0 = orders(s, d).select(col("o_custkey"), col("o_orderkey"))
+        // eager localCheckpoint, not a cache: it truncates the logical
+        // plan so the a1/h1/a2 chain and the final join no longer carry
+        // the join+distinct subtree 4×.
+        val edges = orders(s, d).select(col("o_custkey"), col("o_orderkey"))
           .join(lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
             col("l_partkey")), Seq("o_orderkey"))
           .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
           .distinct()
-        val edges =
-          if (sys.env.get("GRAFT_GRAPH_NOCKPT").contains("1")) edges0
-          else edges0.localCheckpoint(true)
+          .localCheckpoint(true)
         val a1 = edges.groupBy("p").agg(count(lit(1)).as("a1"))
         val h1 = edges.join(a1, Seq("p"))
           .groupBy("c").agg(sum(col("a1")).as("h1"))
@@ -1848,23 +1835,19 @@ object Analytics {
             lineitem(s, d).select(col("l_partkey").as("pk"),
               col("l_suppkey").as("sk")), s"${d}_cosupply")
           .filter(col("w") >= 25)
-        // r15 (verdict item 1): eager localCheckpoint — the undirected
-        // relation is referenced by all 4 BFS-level joins plus the seed
-        // pick, and each level's plan otherwise carries (and AQE
-        // replans) the artifact-read+filter+union subtree of every
-        // previous level; GRAFT_GRAPH_NOCKPT=1 restores the r14 shape.
-        val und0 = e.select(col("a").as("u"), col("b").as("v"))
+        // eager localCheckpoint: the undirected relation is referenced
+        // by all 4 BFS-level joins plus the seed pick, and each level's
+        // plan otherwise carries (and AQE replans) the
+        // artifact-read+filter+union subtree of every previous level
+        val und = e.select(col("a").as("u"), col("b").as("v"))
           .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-        val und =
-          if (sys.env.get("GRAFT_GRAPH_NOCKPT").contains("1")) und0
-          else und0.localCheckpoint(true)
+          .localCheckpoint(true)
         val seeds = und.select(col("u")).distinct()
           .orderBy("u").limit(4).select(col("u").as("seed"))
         var frontier = seeds.select(col("seed"), col("seed").as("node"))
         var levels = List(frontier.withColumn("dd", lit(0L)))
         (1 to 4).foreach { h =>
-          // (r14 note: per-level tracked caches were A/B'd and measured
-          // slower — ReuseExchange covers the two consumers per level.)
+          // uncached: ReuseExchange covers the two consumers per level
           frontier = frontier.join(und, col("node") === col("u"))
             .select(col("seed"), col("v").as("node")).distinct()
           levels = frontier.withColumn("dd", lit(h.toLong)) :: levels
@@ -3988,17 +3971,9 @@ object Analytics {
           .select((col("l_suppkey").cast("bigint") * 2).as("a"),
             (col("l_partkey").cast("bigint") * 2 + 1).as("b"))
           .distinct()
-        // (r14 note: a tracked cache of this edge relation was A/B'd —
-        // ReuseExchange already dedups the distinct's exchanges, so the
-        // cache only added a materialization barrier and measured
-        // consistently SLOWER; left uncached.)
-        // (r15 note: an eager localCheckpoint of this edge relation —
-        // the eigenvector/hits/closeness win — was A/B'd here too and
-        // measured consistently SLOWER (0.98/0.89/0.90 uncheckpointed
-        // vs 1.27/1.13/1.19 s over 3 reversed-order alternations, flat
-        // control): only 2 hop joins ride the subtree, so the
-        // materialization barrier outweighs the plan truncation. Left
-        // lazy.)
+        // left lazy: ReuseExchange already dedups the distinct's
+        // exchanges, and the edge subtree is too shallow for a cache or
+        // checkpoint barrier to pay.
         val edges = e0.select(col("a").as("src"), col("b").as("dst"))
           .union(e0.select(col("b").as("src"), col("a").as("dst")))
         val w1 = edges.groupBy(col("dst").as("node"))
@@ -4177,16 +4152,9 @@ object Analytics {
           .select((col("l_suppkey").cast("bigint") * 2).as("a"),
             (col("l_partkey").cast("bigint") * 2 + 1).as("b"))
           .distinct()
-        // (r14 note: a tracked cache of this edge relation was A/B'd —
-        // ReuseExchange already dedups the distinct's exchanges, so the
-        // cache only added a materialization barrier and measured
-        // consistently SLOWER; left uncached.)
-        // (r15 note: an eager localCheckpoint of this edge relation —
-        // the eigenvector/hits/closeness win — was A/B'd here too and
-        // measured FLAT (1.41/1.47/1.27 uncheckpointed vs
-        // 1.45/1.31/1.32 s over 3 reversed-order alternations, flat
-        // control): one deg join + two aggregates is too shallow for
-        // the materialization to pay. Left lazy.)
+        // left lazy: ReuseExchange already dedups the distinct's
+        // exchanges, and the edge subtree is too shallow for a cache or
+        // checkpoint barrier to pay.
         val edges = e0.select(col("a").as("src"), col("b").as("dst"))
           .union(e0.select(col("b").as("src"), col("a").as("dst")))
         val deg = edges.groupBy(col("dst").as("node"))
@@ -4871,21 +4839,13 @@ object Analytics {
           .select((col("l_suppkey").cast("bigint") * 2).as("a"),
             (col("l_partkey").cast("bigint") * 2 + 1).as("b"))
           .distinct()
-        // (r14 note: a tracked cache of this edge relation was A/B'd —
-        // ReuseExchange already dedups the distinct's exchanges, so the
-        // cache only added a materialization barrier and measured
-        // consistently SLOWER; left uncached.)
-        // r15 (verdict item 1): eager localCheckpoint instead — unlike
-        // a cache it TRUNCATES the logical plan, so the 3 iterate
-        // joins + the final total/rescale no longer carry (and AQE no
-        // longer replans) the scan+distinct subtree every round; the
-        // sim_search_mmr lesson. GRAFT_GRAPH_NOCKPT=1 restores the r14
-        // shape for A/B.
-        val edges0 = e0.select(col("a").as("src"), col("b").as("dst"))
+        // eager localCheckpoint, not a cache: it TRUNCATES the logical
+        // plan, so the 3 iterate joins + the final total/rescale no
+        // longer carry (and AQE no longer replans) the scan+distinct
+        // subtree every round
+        val edges = e0.select(col("a").as("src"), col("b").as("dst"))
           .union(e0.select(col("b").as("src"), col("a").as("dst")))
-        val edges =
-          if (sys.env.get("GRAFT_GRAPH_NOCKPT").contains("1")) edges0
-          else edges0.localCheckpoint(true)
+          .localCheckpoint(true)
         // iterate UNNORMALIZED (x ≤ deg³ fits DECIMAL(38,0) to
         // deg ≈ 2·10⁸) and normalize ONCE at the end: a per-round
         // Σy reference would double the plan every iteration (the

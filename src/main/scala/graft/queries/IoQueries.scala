@@ -916,14 +916,8 @@ object IoQueries {
             col("o_totalprice").as("v"),
             year(col("o_orderdate")).as("y"),
             month(col("o_orderdate")).as("m"))
-            // (r15 note: clustering this write by (y, m) instead of y —
-            // ~5 distinct years hash into ~2 populated tasks, the guide
-            // §2.5 few-distinct-keys trap, 804 ms write stage in the
-            // profile — was A/B'd and measured FLAT-to-slower
-            // (2.60/2.72/2.71 y-only vs 2.85/2.71/2.78 s (y,m) over 3
-            // alternations, flat control): the 12× extra files per leaf
-            // cost the three audit re-reads what the write parallelism
-            // saved. y-only kept — also the fewer-files 100 TB layout.)
+            // clustered by y alone, not (y, m): 12× the files per leaf
+            // cost the three audit re-reads what write parallelism saves
             .repartition(col("y"))
             .write.option("maxRecordsPerFile", mrf)
             .partitionBy("y").parquet(dir)

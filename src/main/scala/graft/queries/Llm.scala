@@ -3056,11 +3056,8 @@ GROUP BY source ORDER BY source"""),
         // embedding relation afterwards. Unmaterialized, the greedy
         // recursion below re-ran this scan ~15× (measured 15 s at
         // sf0.1); checkpointed it runs once.
-        // (r14 note: a lazy tracked cache was tried here instead of the
-        // eager localCheckpoints — planning re-exploded to 19 s because
-        // only checkpointing truncates the LOGICAL plan; cache
-        // substitution still carries the 2^rounds analyzed tree. The
-        // eager checkpoints stay.)
+        // checkpoint, not cache: only checkpointing truncates the
+        // LOGICAL plan; a cache still carries the 2^rounds analyzed tree
         val cand = scoredAll.drop("embedding")
           .withColumn("rn", row_number().over(wP))
           .filter(col("rn") <= 16).drop("rn")

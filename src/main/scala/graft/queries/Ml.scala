@@ -2874,22 +2874,9 @@ object Ml {
         val base = lineitem(s, d).select(col("l_returnflag").as("g"),
           col("l_quantity").cast(DecimalType(18, 2)).as("x"),
           col("l_extendedprice").cast(DecimalType(18, 2)).as("y"))
-        // (r14 note: a two-level blockedCumSum was A/B'd here to
-        // lift the |g|=3 window-task ceiling — the extra block
-        // aggregate + prefix join measured SLOWER at this scale
-        // (2.3 vs 3.1 s, stable control); the plain window stays.
-        // Scale.blockedCumSum remains the device for true skew.)
-        // (r15 note: verdict item 5's "both rank maps in one pass" —
-        // stack (x, y) into (dim, v), one corpus aggregate, one
-        // (g, dim)-partitioned window, filter per dim — was built and
-        // A/B'd: FLAT (2.40/2.50/2.81 two-pass vs 2.60/2.47/2.47 s
-        // stacked over 3 alternations, flat control). The saved scan
-        // was never the cost (37 ms in the profile); the stack doubles
-        // the rows into the partial aggregate and the two broadcast
-        // builds then serialize on the one shared exchange. The
-        // remaining cost is the 3-task cumulative window + the ~200k-
-        // row rank-map broadcast build — the honest rank computation.
-        // Kept two-pass.)
+        // plain window per rank map: the value histograms are small
+        // enough that Scale.blockedCumSum (the device for true skew)
+        // and a stacked one-pass form both cost more than they save
         def rankMap(c: String): DataFrame = {
           val h = base.groupBy(col("g"), col(c))
             .agg(count(lit(1)).as("cnt"))

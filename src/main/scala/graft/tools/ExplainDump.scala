@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<q>_<suffix>.txt —
   * the before/after plan evidence for optimization rounds.
   *   runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> q1 q2 ...
-  * Uses the bench session shape (core count from SPARK_GRAFT_CPUS like the
-  * bench runner, shuffle.partitions to match) so the dumped plan is the one
-  * the bench actually runs. The warehouse dir is derived from outDir so two
-  * concurrent dump runs never collide on saveAsTable artifacts (r14 ADVICE).
+  * Uses the bench session shape (core count from SPARK_GRAFT_CPUS, default
+  * 4 like the bench runner, shuffle.partitions to match) so the dumped plan
+  * is the one the bench actually runs. The warehouse dir is derived from
+  * outDir so two concurrent dump runs never collide on saveAsTable artifacts.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -16,7 +16,7 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val keys = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -7,6 +7,7 @@ import graft.engine.ml.Multimodal.{MediaMeta, MediaRow}
 import graft.engine.udf.Udfs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Engine utility verbs: storage, catalog, multimodal plumbing, UDAF —
   * the reference-parity surface without SQL oracles (SURVEY §1.2, §2.9,
@@ -288,5 +289,24 @@ class EngineSpec extends AnyFunSuite with SparkFixture {
     val ok = SparkEntry.oracleSql.keySet
     assert(ok.subsetOf(qk), s"oracle-only keys: ${ok.diff(qk)}")
     assert(qk.size >= 70)
+  }
+
+  test("no environment variable reaches a production plan") {
+    // only the harness mains and the developer tools may read the
+    // environment; an operator has exactly one code path
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val harness = Set("graft/Bench.scala", "graft/Verify.scala")
+    val envRead = raw"\bsys\.env\b|\bSystem\.getenv\b".r
+    val offenders = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.toList finally files.close()
+    }.map(p => root.relativize(p).toString.replace('\\', '/'))
+      .filter(f => f.endsWith(".scala") && !harness(f) &&
+        !f.startsWith("graft/tools/"))
+      .filter(f => java.nio.file.Files.readString(root.resolve(f))
+        .linesIterator.map(_.trim).exists(l =>
+          !l.startsWith("//") && !l.startsWith("*") &&
+            envRead.findFirstIn(l).isDefined))
+    assert(offenders.isEmpty, s"sys.env / System.getenv read in: $offenders")
   }
 }

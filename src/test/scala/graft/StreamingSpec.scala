@@ -575,8 +575,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       s"fb_${System.nanoTime()}"
     val target = s"$base/target"
     val input = MemoryStream[Ev]
+    // 2 buckets over 4 shuffle partitions: a bucket's rows come from
+    // more than one merge task, so only a write clustered by bucket
+    // lands each bucket as one file
     val q = Sinks.foreachBatchUpsert(input.toDF(), target,
-      s"$base/ckpt", nBuckets = 4)
+      s"$base/ckpt", nBuckets = 2)
     def state(): Map[Long, (Long, String, Double)] =
       spark.read.parquet(target).collect()
         .map(r => r.getAs[Long]("user_id") ->
@@ -604,13 +607,25 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       // at-least-once redelivery: re-upserting batch 2's data directly
       // through the merge is a no-op (idempotent without a txn log)
       import spark.implicits._
+      // uncoalesced, like the streaming batches (no AQE there)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       Sinks.upsertBatch(Seq(
         (1L, 3L, tsUs("2024-01-01 11:00:00"), "purchase", 9.0),
         (3L, 4L, tsUs("2024-01-01 10:01:00"), "click", 3.0))
         .toDF("user_id", "event_id", "t_us", "event_type", "value"),
-        target, nBuckets = 4)
+        target, nBuckets = 2)
       assert(state() === after, "replaying a committed batch changed state")
-    } finally q.stop()
+      // no small-file fan-out: one part file per bucket directory
+      val perBucket = new java.io.File(target).listFiles().toSeq
+        .filter(_.getName.startsWith("bucket="))
+        .map(b => b.getName -> b.list().count(n =>
+          n.startsWith("part-") && n.endsWith(".parquet")))
+      assert(perBucket.nonEmpty && perBucket.forall(_._2 == 1),
+        s"part files per bucket: $perBucket")
+    } finally {
+      q.stop()
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
   }
 
   private def tsUs(s: String): Long = ts(s).getTime * 1000L
